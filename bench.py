@@ -189,9 +189,8 @@ def main() -> None:
     # materialize_graph runs) twice from cold caches, min taken — a
     # steady-state strong-scaling measurement
     if os.environ.get("BENCH_SCALE_MODE"):
-        # the at-scale configuration: no driver-side broadcast (the alias
-        # dict of a 10^12-doc vault cannot broadcast), notes CACHED — the
-        # edge plan consumes the tokenize stage three times (dict side,
+        # the at-scale configuration: notes CACHED — the edge plan
+        # consumes the tokenize stage three times (dict side,
         # mention side, tag-triple branch), so an uncached run pays the
         # Python stage 3× (measured 155 s vs 45 s at sf1 local[32]); a real
         # pipeline materializes that stage exactly once (plans/materialize
@@ -200,7 +199,7 @@ def main() -> None:
         # growth).
         runs = []
         triples = 0
-        opts = GraphBuildOptions(persist_notes=True, broadcast_dict=False)
+        opts = GraphBuildOptions(persist_notes=True)
         for i in range(2):
             if i:
                 spark.catalog.clearCache()
@@ -239,9 +238,9 @@ def main() -> None:
             docs.count()
             timed("py_worker_warmup", _warm)
 
-        # build_graph's auto broadcast decision counts the alias dict, which
-        # materializes the tokenize stage — so the BUILD CALL is the
-        # tokenize+dict timing, and the edge count is the link timing
+        # build_graph is lazy, so kg_tokenize times the nodes count that
+        # populates the persisted tokenize stage; the dictionary is built
+        # inside the edge count that kg_build_edges times
         built = {}
 
         def kg_tokenize():

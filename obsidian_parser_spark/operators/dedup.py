@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
+from .textstats import _TOKENS
 
 # ---------------------------------------------------------------- exact
 
@@ -51,16 +52,14 @@ def exact_duplicates(documents: DataFrame, id_col: str = "doc_id", text_col: str
 
 # ---------------------------------------------------------------- shingles
 
-_TOKENS = "filter(split(lower({text}), '\\\\s+'), t -> t != '')"
-
-
-def shingles(
-    documents: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+def _ngram_shingles(
+    documents: DataFrame, n: int, id_col: str, text_col: str, distinct: bool
 ) -> DataFrame:
-    """(doc_id, shingle) pairs — word n-grams joined with ' ', whole text as
-    a single shingle when shorter than n tokens.
+    """The one n-gram builder behind ``shingles`` / ``distinct_shingles``:
+    the CASE array is the doc's n-grams, or its whole text as one shingle
+    when shorter than n tokens; ``distinct`` wraps it in ``array_distinct``.
 
-    Shingle construction uses ``pyspark.ml.feature.NGram`` — a compiled JVM
+    N-grams come from ``pyspark.ml.feature.NGram`` — a compiled JVM
     closure.  The obvious alternative, a ``transform(sequence(...), i ->
     array_join(slice(...)))`` higher-order expression, is INTERPRETED per
     element and measured 5× slower at 92M shingles (30.5 s vs 6.1 s on
@@ -71,18 +70,23 @@ def shingles(
 
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(text=text_col)).alias("_t"),
+        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
     )
     ng = NGram(n=n, inputCol="_t", outputCol="_ng")
+    arr = f"CASE WHEN size(_t) >= {n} THEN _ng ELSE array(array_join(_t, ' ')) END"
+    if distinct:
+        arr = f"array_distinct({arr})"
     return ng.transform(toks).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(_t) >= {n} THEN _ng "
-                f"ELSE array(array_join(_t, ' ')) END"
-            )
-        ).alias("shingle"),
+        "doc_id", F.explode(F.expr(arr)).alias("shingle")
     )
+
+
+def shingles(
+    documents: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(doc_id, shingle) pairs — word n-grams joined with ' ', whole text as
+    a single shingle when shorter than n tokens."""
+    return _ngram_shingles(documents, n, id_col, text_col, distinct=False)
 
 
 def distinct_shingles(
@@ -98,22 +102,7 @@ def distinct_shingles(
     just to dedup rows that were never spread across partitions).  Every
     consumer (dupspans, the incremental index, ngram/containment/
     contamination/verified) drops one corpus-wide shuffle."""
-    from pyspark.ml.feature import NGram
-
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(text=text_col)).alias("_t"),
-    )
-    ng = NGram(n=n, inputCol="_t", outputCol="_ng")
-    return ng.transform(toks).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"array_distinct(CASE WHEN size(_t) >= {n} THEN _ng "
-                f"ELSE array(array_join(_t, ' ')) END)"
-            )
-        ).alias("shingle"),
-    )
+    return _ngram_shingles(documents, n, id_col, text_col, distinct=True)
 
 
 def ngram_jaccard_pairs(
@@ -446,7 +435,7 @@ def simhash_signatures(
     """
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.expr(_TOKENS.format(text=text_col))).alias("token"),
+        F.explode(F.expr(_TOKENS.format(t=text_col))).alias("token"),
     )
     if hash_fn == "md5":
         # hex nibble i = chars of md5[0:16]; bit j = bit (3 - j%4) of

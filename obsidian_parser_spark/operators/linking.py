@@ -1,4 +1,4 @@
-"""Entity linking: alias dictionary build + broadcast mention resolution.
+"""Entity linking: alias dictionary build + mention resolution.
 
 Reference semantics (SURVEY.md §2.3):
 
@@ -17,9 +17,13 @@ Reference semantics (SURVEY.md §2.3):
   against ``kind='alias'`` entries.  Disable with ``use_aliases=False`` for
   strict reference parity.
 
-Scale shape: the dictionary is ~3 small rows per note (id, stem, aliases) —
-broadcast it; the mentions side never shuffles.  Dictionary dedup is one
-shuffle on (alias, kind), partial-aggregated map-side.
+Scale shape: the dictionary is ~3 small rows per note (id, stem, aliases).
+Every resolver (``resolve_mentions``, ``qualified_link_edges`` and, through
+the first, ``structure.inline_fields``) runs one shared join shape with no
+join hints: the planner broadcasts the dictionary under the session's
+``autoBroadcastJoinThreshold`` (the mentions side then never shuffles) and
+otherwise shuffle-joins, with AQE free to convert at runtime.  Dictionary
+dedup is one shuffle on (alias, kind), partial-aggregated map-side.
 """
 
 from __future__ import annotations
@@ -86,92 +90,55 @@ def build_alias_dict(notes: DataFrame, use_aliases: bool = True) -> DataFrame:
     return dedup_alias_dict(alias_candidates(notes, use_aliases=use_aliases))
 
 
+def _resolve(frame: DataFrame, alias_dict: DataFrame, use_aliases: bool) -> DataFrame:
+    """frame(..., raw_target) → frame + ``obj`` (NULL when unresolved):
+    the '/'-routed J2 lookup, then — with ``use_aliases`` — the J5
+    ``kind='alias'`` fallback.  Two chained left joins + coalesce: the
+    mention stream is scanned once and the level-1 winner always stands
+    (the dictionary is unique-keyed, first-wins).  No join hints; the
+    fallback probes only the ``kind='alias'`` slice, so it can still
+    broadcast when the whole dictionary is over the threshold."""
+    routed = frame.withColumn(
+        "route",
+        F.when(F.col("raw_target").contains("/"), F.lit(KIND_FULL)).otherwise(
+            F.lit(KIND_SHORT)
+        ),
+    )
+    j = routed.join(
+        alias_dict,
+        (routed["raw_target"] == alias_dict["alias"])
+        & (routed["route"] == alias_dict["kind"]),
+        "left",
+    )
+    obj = F.col("canonical")
+    if use_aliases:
+        ad = alias_dict.filter(F.col("kind") == KIND_ALIAS).select(
+            F.col("alias").alias("_al2"), F.col("canonical").alias("_can2")
+        )
+        j = j.join(ad, j["raw_target"] == ad["_al2"], "left")
+        obj = F.coalesce(obj, F.col("_can2"))
+    return j.select(*frame.columns, obj.alias("obj"))
+
+
 def resolve_mentions(
     mentions: DataFrame,
     alias_dict: DataFrame,
     use_aliases: bool = True,
-    broadcast: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """(subj, mention_ord, pred, raw_target) × dict → (edges, dangling).
 
     edges:    (subj, mention_ord, pred, obj)   — one row per occurrence
     dangling: unresolved mentions (reference drops these silently,
               graph_builder.rs:160-161; we count them)
-
-    ``broadcast``: hash-map probe semantics of the reference Index — right
-    for small/medium dictionaries.  For vault-scale dictionaries (10^9+
-    aliases) the broadcast build serializes on the driver and can't fit —
-    pass False for a shuffled hash join (AQE picks the physical strategy;
-    skew-split handles hot aliases).  ``build_graph`` auto-selects.
     """
-    routed = mentions.withColumn(
-        "route",
-        F.when(F.col("raw_target").contains("/"), F.lit(KIND_FULL)).otherwise(
-            F.lit(KIND_SHORT)
-        ),
+    r = _resolve(mentions, alias_dict, use_aliases)
+    edges = r.filter(F.col("obj").isNotNull()).select(
+        "subj", "mention_ord", "pred", "obj"
     )
-    d = F.broadcast(alias_dict) if broadcast else alias_dict
-    joined = routed.join(
-        d,
-        (routed["raw_target"] == d["alias"]) & (routed["route"] == d["kind"]),
-        "left",
-    )
-
-    if use_aliases and broadcast:
-        # Two CHAINED broadcast left joins + coalesce instead of
-        # join-filter-union: the old shape fed both the hit branch and the
-        # miss branch from the same join subtree, so materializing the
-        # edges evaluated the full mention explode + dictionary probe
-        # TWICE.  Probing the alias fallback for already-resolved rows is
-        # a per-row hash lookup against an (unique-keyed, first-wins)
-        # dict — coalesce keeps the level-1 winner, so the two-level
-        # resolution rule is unchanged and the mention stream is scanned
-        # once.  Only taken on the broadcast path: with shuffle joins the
-        # chain would shuffle the FULL stream twice where the old shape
-        # shuffles full + (small) misses, so the two-phase form stays the
-        # at-scale plan.
-        ad = alias_dict.filter(F.col("kind") == KIND_ALIAS).select(
-            F.col("alias").alias("_al2"), F.col("canonical").alias("_can2")
-        )
-        j2 = joined.join(
-            F.broadcast(ad), joined["raw_target"] == ad["_al2"], "left"
-        )
-        chained = j2.select(
-            "subj",
-            "mention_ord",
-            "pred",
-            "raw_target",
-            F.coalesce(F.col("canonical"), F.col("_can2")).alias("_obj"),
-        )
-        resolved = chained.filter(F.col("_obj").isNotNull()).select(
-            "subj", "mention_ord", "pred", F.col("_obj").alias("obj")
-        )
-        dangling = chained.filter(F.col("_obj").isNull()).select(
-            "subj", "mention_ord", "pred", "raw_target"
-        )
-        return resolved, dangling
-
-    resolved = joined.filter(F.col("canonical").isNotNull()).select(
-        "subj", "mention_ord", "pred", F.col("canonical").alias("obj")
-    )
-    missed = joined.filter(F.col("canonical").isNull()).select(
+    dangling = r.filter(F.col("obj").isNull()).select(
         "subj", "mention_ord", "pred", "raw_target"
     )
-    if use_aliases:
-        ad = alias_dict.filter(F.col("kind") == KIND_ALIAS)
-        j2 = missed.join(ad, missed["raw_target"] == ad["alias"], "left")
-        resolved = resolved.unionByName(
-            j2.filter(F.col("canonical").isNotNull()).select(
-                "subj", "mention_ord", "pred", F.col("canonical").alias("obj")
-            )
-        )
-        dangling = j2.filter(F.col("canonical").isNull()).select(
-            "subj", "mention_ord", "pred", "raw_target"
-        )
-    else:
-        dangling = missed
-
-    return resolved, dangling
+    return edges, dangling
 
 
 def identity_clusters(notes: DataFrame) -> DataFrame:
@@ -222,11 +189,7 @@ def identity_clusters(notes: DataFrame) -> DataFrame:
     )
 
 
-def qualified_link_edges(
-    spans: DataFrame,
-    alias_dict: DataFrame,
-    broadcast: bool = True,
-) -> DataFrame:
+def qualified_link_edges(spans: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """→ (subj, pred, obj, qual_kind, qualifier) — resolved link/embed
     triples that carry a sub-note anchor, the heading (``[[note#head]]``)
     or block (``[[note^blk]]``) qualifier the plain edge extraction strips
@@ -242,8 +205,8 @@ def qualified_link_edges(
 
     Scale shape: one JVM-side regexp/split projection over the spans frame
     (no Python), then the SAME '/'-routed two-level dict resolution as
-    ``resolve_mentions`` — broadcast probe for small dictionaries, shuffle
-    join otherwise.  Unresolved anchors are dropped (silent-drop parity,
+    ``resolve_mentions`` (one shared helper; the planner picks the join).
+    Unresolved anchors are dropped (silent-drop parity,
     graph_builder.rs:160-161).
 
     ``spans``: (doc_id, spans array<struct<kind,text,media_ref,offset>>)."""
@@ -289,36 +252,10 @@ def qualified_link_edges(
             )
         ).alias("qualifier"),
     )
-    routed = q.withColumn(
-        "route",
-        F.when(F.col("raw_target").contains("/"), F.lit(KIND_FULL)).otherwise(
-            F.lit(KIND_SHORT)
-        ),
-    )
-    d = F.broadcast(alias_dict) if broadcast else alias_dict
-    j1 = routed.join(
-        d,
-        (routed["raw_target"] == d["alias"]) & (routed["route"] == d["kind"]),
-        "left",
-    )
-    # chained left joins + coalesce (same one-pass restructure as
-    # resolve_mentions): the old hit1 ∪ hit2-over-missed shape evaluated
-    # the span explode + level-1 probe twice per action
-    ad = alias_dict.filter(F.col("kind") == KIND_ALIAS).select(
-        F.col("alias").alias("_al2"), F.col("canonical").alias("_can2")
-    )
-    if broadcast:
-        ad = F.broadcast(ad)
-    j2 = j1.join(ad, j1["raw_target"] == ad["_al2"], "left")
     return (
-        j2.select(
-            "subj",
-            "pred",
-            F.coalesce(F.col("canonical"), F.col("_can2")).alias("obj"),
-            "qual_kind",
-            "qualifier",
-        )
+        _resolve(q, alias_dict, use_aliases=True)
         .filter(F.col("obj").isNotNull())
+        .select("subj", "pred", "obj", "qual_kind", "qualifier")
     )
 
 

@@ -16,7 +16,7 @@ All three extractors are pure JVM expressions (split + regexp over the
 content column — no Python, no UDF): per document the work is linear in
 its line count, line order comes from one posexplode index, and the only
 shuffle anywhere is inline_fields' dictionary join, which reuses the
-graph build's broadcast/shuffle auto-selection.
+graph build's resolver (the planner picks broadcast or shuffle).
 """
 
 from __future__ import annotations
@@ -81,7 +81,6 @@ def task_items(content_df: DataFrame) -> DataFrame:
 def inline_fields(
     content_df: DataFrame,
     alias_dict: DataFrame | None = None,
-    broadcast: bool = True,
 ) -> DataFrame:
     """→ (doc_id, field_ord, field, value, obj): Dataview-style
     ``key:: value`` inline fields in document order.  When ``value`` is a
@@ -93,9 +92,9 @@ def inline_fields(
     property.
 
     Scale shape: extraction is JVM regexp over lines; resolution reuses
-    ``linking.resolve_mentions`` unchanged, so the dictionary join keeps
-    the broadcast/shuffle auto-selection and hub-alias behavior of the
-    main edge build — no second resolution codepath to drift."""
+    ``linking.resolve_mentions`` unchanged, so the dictionary join and
+    hub-alias behavior are those of the main edge build — no second
+    resolution codepath to drift."""
     fl = _lines(content_df).filter(F.col("line").rlike(_FIELD_RE))
     w = Window.partitionBy("doc_id").orderBy("pos")
     fields = fl.select(
@@ -124,7 +123,7 @@ def inline_fields(
         F.col("field").alias("pred"),
         F.col("_tgt").alias("raw_target"),
     )
-    resolved, _ = resolve_mentions(mentions, alias_dict, broadcast=broadcast)
+    resolved, _ = resolve_mentions(mentions, alias_dict)
     r = resolved.select(
         F.col("subj").alias("doc_id"),
         F.col("mention_ord").alias("field_ord"),

@@ -5,9 +5,9 @@ This is the engine's equivalent of the reference's
 one declarative DataFrame plan:
 
   documents ─ tokenize (1 Arrow stage) ─┬─ nodes
-                                        ├─ alias dict ─ broadcast ─┐
-                                        └─ mentions ───────────────┴─ edges
-                                                                     dangling
+                                        ├─ alias dict ───┐ planner-chosen
+                                        └─ mentions ─────┴─ join ─ edges
+                                                                   dangling
 
 Analyzer-style pre-filters (reference examples/analyzer.rs:38-49: drop
 parse errors / empty notes / todo notes before graph build) are options.
@@ -38,11 +38,6 @@ class GraphBuildOptions:
     drop_empty: bool = False  # analyzer.rs:45
     drop_todo: bool = False  # analyzer.rs:46-49
     persist_notes: bool = True  # cache the tokenize stage (3 consumers)
-    # None = auto: broadcast the alias dict when small (hash-map probe,
-    # reference Index semantics), shuffle join when it would bottleneck the
-    # driver.  True/False forces.
-    broadcast_dict: bool | None = None
-    broadcast_dict_max_rows: int = 1_000_000
     # north_star canonicalization: rewrite every edge endpoint to its
     # identity-cluster canonical id (linking.identity_clusters — CC over
     # shared-stem ∪ identical-content ∪ alias→name evidence), collapsing
@@ -73,7 +68,11 @@ def build_graph(
     raw_text: bool = False,
 ) -> GraphBuild:
     """documents(doc_id, spans) — or (doc_id, raw_text) with raw_text=True —
-    → GraphBuild.  Lazy: nothing executes until an action on the outputs."""
+    → GraphBuild.  Lazy: no Spark job runs until an action on the outputs
+    (``canonicalize_identities`` aside — its CC pass cuts lineage eagerly).
+    The dictionary join carries no hint: the planner broadcasts it under
+    ``spark.sql.autoBroadcastJoinThreshold`` and AQE may convert a shuffled
+    join at runtime, so nothing is counted up front to choose a strategy."""
     opts = opts or GraphBuildOptions()
     notes = (
         tokenize_raw_text(documents, include_mdlinks=opts.include_mdlinks)
@@ -95,14 +94,9 @@ def build_graph(
         notes = notes.persist()
 
     alias_dict = build_alias_dict(notes, use_aliases=opts.use_aliases)
-    bc = opts.broadcast_dict
-    if bc is None:
-        # auto: one count on the (persisted) dict decides the join strategy
-        alias_dict = alias_dict.persist()
-        bc = alias_dict.count() <= opts.broadcast_dict_max_rows
     mentions = mentions_from_notes(notes)
     edges, dangling = resolve_mentions(
-        mentions, alias_dict, use_aliases=opts.use_aliases, broadcast=bc
+        mentions, alias_dict, use_aliases=opts.use_aliases
     )
     if opts.include_tag_triples:
         edges = edges.unionByName(tag_triples(notes))

@@ -16,7 +16,7 @@ def get_spark(
     """Build a session.
 
     Defaults chosen for the target workload (wide pandas-UDF tokenize stage +
-    broadcast-join linking + iterative CC):
+    planner-chosen linking joins + iterative CC):
 
     * AQE on (runtime coalescing + skew-join splitting for hub notes);
     * Arrow on (the tokenize stage is a mapInPandas over Arrow batches);

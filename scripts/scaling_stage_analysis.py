@@ -11,7 +11,7 @@ to a named stage instead of guessed:
   phase 2  alias dictionary  - candidate explode + first-wins dedup
                                (one shuffle over ~2 rows/doc)
   phase 3  edge resolution   - mention explode + dict join + count
-                               (the big shuffle join)
+                               (join strategy chosen by the planner)
 
 Prints one JSON line per (cpus, phase) plus a summary with per-phase
 efficiency and the same spin-loop hardware ceiling bench_scaling uses.
@@ -51,7 +51,7 @@ docs.count()  # warm input listing/footers
 # warm the python worker pool (bench.py does the same)
 spark.range(1000).selectExpr("id").toPandas()
 
-opts = GraphBuildOptions(persist_notes=True, broadcast_dict=False)
+opts = GraphBuildOptions(persist_notes=True)
 phases = {{}}
 for rnd in range(2):  # run 1 pays JIT; keep best per phase
     spark.catalog.clearCache()

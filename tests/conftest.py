@@ -22,3 +22,18 @@ def micro_vault(spark):
     from tests.util import spans_df
 
     return spans_df(spark, micro_vault_rows())
+
+
+@pytest.fixture(params=["default", "no_autobroadcast"])
+def join_threshold(spark, request):
+    """Runs a test under the session's broadcast threshold and again with
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` (the planner may then never
+    broadcast); restores the conf afterwards.  Yields the param name."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param == "no_autobroadcast":
+        spark.conf.set(key, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, old)

@@ -8,7 +8,7 @@ from obsidian_parser_spark.plans.pipeline import (
     reference_parity_options,
 )
 from obsidian_parser_spark.sources.corpus import spans_from_raw
-from tests.util import spans_df
+from tests.util import assert_join_follows_threshold, spans_df
 
 
 def test_micro_vault_golden(spark, micro_vault):
@@ -77,9 +77,9 @@ def test_unresolved_dropped_no_dangling_nodes(spark):
     assert [r.raw_target for r in g.dangling.collect()] == ["ghost"]
 
 
-def test_alias_fallback_extension(spark):
+def test_alias_fallback_extension(spark, join_threshold):
     """J5: frontmatter aliases consulted only for J2 misses, and only when
-    enabled."""
+    enabled — the same rows whether or not the planner may broadcast."""
     rows = [
         spans_from_raw("a", "[[MyAlias]] [[b]]"),
         spans_from_raw("b", "---\naliases:\n- MyAlias\n---\nx"),
@@ -90,9 +90,27 @@ def test_alias_fallback_extension(spark):
         ("a", "b"),
         ("a", "b"),
     ]
+    assert_join_follows_threshold(g_on.edges, join_threshold)
     g_off = build_graph(df, reference_parity_options())
     assert sorted((r.subj, r.obj) for r in g_off.edges.collect()) == [("a", "b")]
+    assert_join_follows_threshold(g_off.edges, join_threshold)
     assert g_off.dangling.count() == 1
+
+
+def test_build_graph_submits_no_job(spark):
+    """build_graph only plans: the dictionary join needs no up-front count,
+    so no Spark job runs until an action on its outputs."""
+    df = spans_df(spark, [spans_from_raw("a", "[[b]]"), spans_from_raw("b", "x")])
+    sc = spark.sparkContext
+    group = "build-graph-is-lazy"
+    sc.setJobGroup(group, "build_graph must not run jobs")
+    try:
+        g = build_graph(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert g.edges.count() == 1
 
 
 def test_embeds_and_mdlinks_preds(spark):

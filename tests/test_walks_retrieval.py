@@ -105,13 +105,13 @@ def test_walks_step_dependent_hash_breaks_two_cycles(spark):
 # --- qualified link edges ----------------------------------------------------
 
 
-def test_qualified_link_edges_micro(spark):
+def test_qualified_link_edges_micro(spark, join_threshold):
     from obsidian_parser_spark.operators.linking import (
         build_alias_dict,
         qualified_link_edges,
     )
     from obsidian_parser_spark.operators.tokenize import tokenize_documents
-    from tests.util import spans_df
+    from tests.util import assert_join_follows_threshold, spans_df
 
     rows = [
         ("n1", [("text", "x ", None, 0), ("wikilink", "[[n2#Intro]]", None, 2)]),
@@ -123,9 +123,8 @@ def test_qualified_link_edges_micro(spark):
     ]
     docs = spans_df(spark, _span_rows(rows))
     dict_df = build_alias_dict(tokenize_documents(docs))
-    got = sorted(
-        map(tuple, qualified_link_edges(docs, dict_df).collect())
-    )
+    q = qualified_link_edges(docs, dict_df)
+    got = sorted(map(tuple, q.collect()))
     assert got == sorted(
         [
             ("n1", "links_to", "n2", "heading", "Intro"),
@@ -134,6 +133,7 @@ def test_qualified_link_edges_micro(spark):
             ("n4", "embeds", "n1", "heading", "Fig 1"),
         ]
     )
+    assert_join_follows_threshold(q, join_threshold)
 
 
 def test_qualified_heading_wins_over_block_and_alias(spark):

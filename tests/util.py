@@ -30,3 +30,10 @@ def spans_df(spark: SparkSession, rows: list[dict]):
         for r in rows
     ]
     return spark.createDataFrame(data, SPAN_SCHEMA)
+
+
+def assert_join_follows_threshold(df, join_threshold: str) -> None:
+    """After ``df`` ran: its final (post-AQE) plan broadcasts iff the
+    broadcast threshold is on — joins carry no hint that overrides it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("BroadcastHashJoin" in plan) == (join_threshold == "default"), plan
