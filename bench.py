@@ -184,22 +184,20 @@ def main() -> None:
 
     timed("py_worker_warmup", _warm)
 
-    # scale mode (bench_scaling.py): the identical end-to-end pipeline
-    # (tokenize → persist → link → edge count, exactly what
-    # materialize_graph runs) twice from cold caches, min taken — a
-    # steady-state strong-scaling measurement
+    # scale mode (bench_scaling.py): build_graph's end-to-end pipeline
+    # (prepare_notes → persist → link_notes → edge count; materialize_graph
+    # runs the same two stages by construction) twice from cold caches, min
+    # taken — a steady-state strong-scaling measurement
     if os.environ.get("BENCH_SCALE_MODE"):
-        # the at-scale configuration: notes CACHED — the edge plan
-        # consumes the tokenize stage three times (dict side,
-        # mention side, tag-triple branch), so an uncached run pays the
-        # Python stage 3× (measured 155 s vs 45 s at sf1 local[32]); a real
-        # pipeline materializes that stage exactly once (plans/materialize
-        # writes it).  Timing includes the cache population.  Two runs from
-        # cold caches, min = steady state (run 1 pays JIT + allocator
-        # growth).
+        # build_graph always caches the notes: the edge plan consumes the
+        # tokenize stage three times (dict side, mention side, tag-triple
+        # branch), so an uncached run would pay the Python stage 3×
+        # (measured 155 s vs 45 s at sf1 local[32]).  Timing includes the
+        # cache population.  Two runs from cold caches, min = steady state
+        # (run 1 pays JIT + allocator growth).
         runs = []
         triples = 0
-        opts = GraphBuildOptions(persist_notes=True)
+        opts = GraphBuildOptions()
         for i in range(2):
             if i:
                 spark.catalog.clearCache()

@@ -202,43 +202,10 @@ def bfs_distances(
     reachable in ≤ ``max_depth`` hops (dist 0 = the root itself);
     unreachable nodes are absent.  The standard KG reachability/
     neighborhood query (``edges`` needs (subj, obj); pass
-    ``analytics.link_edges(...)`` for the link graph).
-
-    Scale shape: classic frontier expansion — per round ONE equi-join of
-    the (small) frontier onto the edge list plus an anti-join against the
-    visited set, both key-partitioned; the visited set is re-checkpointed
-    per round (``cut_lineage`` — reliable store when configured) exactly
-    like the CC/PageRank fixpoints, so round N's plan never contains
-    rounds 0..N-1.  Rounds stop early on an empty frontier (one cheap
-    count on a frame already materialized by the checkpoint); results are
-    independent of the stop rule — later rounds of an empty frontier are
-    empty.  A 10^7-degree hub lands in the frontier once and fans out via
-    the partial-agg distinct, never through a single reducer."""
-    spark = edges.sparkSession
-    # materialize the distinct edge list ONCE — it is re-joined every round
-    e = cut_lineage(
-        edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).distinct()
-    )
-    visited = cut_lineage(
-        spark.createDataFrame([(root, 0)], "id string, dist int")
-    )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        # the frontier is checkpointed BEFORE the union/count, so the
-        # empty-frontier probe and next round read a materialized frame
-        # instead of re-deriving the whole round chain (lineage cut)
-        nxt = cut_lineage(
-            e.join(frontier.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(d).cast("int"))
-        )
-        visited = cut_lineage(visited.unionByName(nxt))
-        frontier = nxt
-        if frontier.limit(1).count() == 0:
-            break
-    return visited
+    ``analytics.link_edges(...)`` for the link graph).  It is
+    ``multi_source_bfs`` with the one seed ``root``."""
+    seeds = edges.sparkSession.createDataFrame([(root,)], "seed string")
+    return multi_source_bfs(edges, seeds, max_depth).select("id", "dist")
 
 
 def multi_source_bfs(
@@ -250,13 +217,20 @@ def multi_source_bfs(
     for each (node, seed) pair with the node reachable from that seed in
     ≤ ``max_depth`` hops.  ``seeds`` is a one-column ('seed') frame.
 
-    Scale shape: identical frontier-expansion fixpoint to
-    ``bfs_distances`` but keyed on the (id, seed) PAIR — s seeds cost one
-    BFS whose state is at most s× larger, not s sequential jobs (the
-    per-round edge join and anti-join stay key-partitioned; the frontier
-    distinct is map-side combined).  Per-round lineage cut + early empty-
-    frontier exit as in the single-source version; results are
-    independent of the stop rule."""
+    Scale shape: classic frontier expansion keyed on the (id, seed) PAIR —
+    s seeds cost one BFS whose state is at most s× larger, not s
+    sequential jobs.  Per round ONE equi-join of the (small) frontier onto
+    the edge list plus an anti-join against the visited set, both
+    key-partitioned; the frontier distinct is map-side combined, so a
+    10^7-degree hub lands in the frontier once and fans out without a
+    single reducer.  The visited set is re-checkpointed per round
+    (``cut_lineage`` — reliable store when configured) exactly like the
+    CC/PageRank fixpoints, so round N's plan never contains rounds
+    0..N-1.  Rounds stop early on an empty frontier (one cheap count on a
+    frame already materialized by the checkpoint); results are
+    independent of the stop rule — later rounds of an empty frontier are
+    empty."""
+    # materialize the distinct edge list ONCE — it is re-joined every round
     e = cut_lineage(
         edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).distinct()
     )
@@ -267,6 +241,9 @@ def multi_source_bfs(
     )
     frontier = visited
     for d in range(1, max_depth + 1):
+        # the frontier is checkpointed BEFORE the union/count, so the
+        # empty-frontier probe and next round read a materialized frame
+        # instead of re-deriving the whole round chain (lineage cut)
         nxt = cut_lineage(
             e.join(frontier.select(F.col("id").alias("src"), "seed"), "src")
             .select(F.col("dst").alias("id"), "seed")

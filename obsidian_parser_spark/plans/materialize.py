@@ -1,6 +1,8 @@
 """Graph materialization: bucketed nodes/edges tables + resumable lineage.
 
-North-rule requirements implemented here:
+The graph is ``plans.pipeline``'s ``prepare_notes`` → ``link_notes``, the
+dataflow ``build_graph`` runs, so every ``GraphBuildOptions`` field applies
+alike; this module adds the storage layout and the resume protocol:
 
 * **doc_id-bucketed partitioning** — nodes and edges are written
   partitioned by ``bucket = pmod(xxhash64(doc_id), n_buckets)`` (edges by
@@ -14,8 +16,10 @@ North-rule requirements implemented here:
   status, finished_at_step).  A re-run with the same run_id reads the
   manifest first and processes ONLY buckets without a ``done`` row —
   tokenization (the expensive stage) is never repeated for completed
-  buckets.  The alias dictionary is global, so it is built once per run
-  and persisted alongside (a resume reuses it instead of rescanning).
+  buckets.  The alias dictionary is global: a fresh run builds it from its
+  notes and writes it alongside; only a partial resume reads it back.
+  Identity clusters are global too, so ``canonicalize_identities`` is
+  refused on a partial resume.
 * **hub-skew salting** — the backlink metric inside the manifest uses the
   explicit two-phase salted aggregation; large joins run under AQE skew
   handling (session defaults).
@@ -34,9 +38,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.linking import build_alias_dict, resolve_mentions
-from ..operators.tokenize import mentions_from_notes, tag_triples, tokenize_documents
-from .pipeline import GraphBuildOptions
+from ..operators.linking import build_alias_dict
+from .pipeline import GraphBuildOptions, link_notes, prepare_notes
 
 MANIFEST_SCHEMA = (
     "run_id string, bucket int, n_docs long, n_edges long, n_dangling long, "
@@ -91,13 +94,14 @@ def _is_local_path(spark: SparkSession, path: str) -> bool:
     return default_fs.startswith("file:")
 
 
-def _read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
-    """None ⇔ the manifest genuinely doesn't exist yet.  Any OTHER read
-    failure (e.g. a torn parquet footer from a crashed writer) propagates
-    LOUDLY: swallowing it would silently restart the whole run — the
-    exact cost the manifest exists to avoid.  (The atomic temp+rename
-    commit in ``_append_manifest`` makes a torn file unreachable in the
-    first place; this is defense in depth.)
+def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """None ⇔ the parquet dataset (manifest, alias dict) genuinely doesn't
+    exist yet.  Any OTHER read failure (e.g. a torn parquet footer from a
+    crashed writer) propagates LOUDLY: swallowing it would silently
+    restart the whole run — the exact cost the manifest exists to avoid —
+    or misreport a torn dictionary as missing.  (The atomic temp+rename
+    commit in ``_append_manifest`` makes a torn manifest unreachable in
+    the first place; this is defense in depth.)
 
     Local paths are probed with the os module; remote paths (hdfs://,
     s3a://, or scheme-less under a remote fs.defaultFS) go through the
@@ -162,10 +166,17 @@ def materialize_graph(
     resume: bool = True,
     rebuild_dict: bool = False,
 ) -> MaterializeResult:
-    """Tokenize → link → write bucketed nodes/edges with a lineage manifest.
+    """``prepare_notes`` → ``link_notes`` (every ``opts`` field applies, as
+    in ``build_graph``) → bucketed nodes/edges with a lineage manifest.
 
     Resumable: a second call with the same (out_dir, run_id) skips buckets
     whose manifest row is ``done`` — kill the job mid-run and re-submit.
+    A fresh run builds the alias dict from its notes and overwrites
+    ``alias_dict_<run_id>``; a partial resume reads it, raising
+    ``RuntimeError`` if it is missing (``rebuild_dict=True`` rebuilds it
+    from the whole corpus) and propagating any other read error.  A partial
+    resume with ``canonicalize_identities`` raises ``ValueError``: identity
+    clusters span buckets.  Both checks run before any work.
     """
     opts = opts or GraphBuildOptions()
     nodes_path = os.path.join(out_dir, "nodes")
@@ -173,10 +184,9 @@ def materialize_graph(
     dict_path = os.path.join(out_dir, f"alias_dict_{run_id}")
     manifest_path = os.path.join(out_dir, "manifest")
 
-    all_buckets = list(range(n_buckets))
     done: set[int] = set()
     if resume:
-        m = _read_manifest(spark, manifest_path)
+        m = _read_parquet_if_exists(spark, manifest_path)
         if m is not None:
             done = {
                 r.bucket
@@ -187,113 +197,109 @@ def materialize_graph(
                 .distinct()
                 .collect()
             }
-    pending = [b for b in all_buckets if b not in done]
+    pending = [b for b in range(n_buckets) if b not in done]
     if not pending:
         return MaterializeResult(nodes_path, edges_path, manifest_path, [], sorted(done))
+    fresh = len(pending) == n_buckets
 
-    docs = documents.withColumn("bucket", _bucket("doc_id", n_buckets))
-
-    # --- phase 2 input: pending buckets only (filter pushes to the scan)
-    sub = docs.filter(F.col("bucket").isin(pending))
-    notes = tokenize_documents(sub, include_mdlinks=opts.include_mdlinks).persist()
-
-    # --- phase 1: global alias dictionary — built ONCE per run and
-    # persisted; a resume reloads it instead of re-tokenizing the corpus.
-    # On a fresh run (all buckets pending) the pending notes ARE the corpus,
-    # so the tokenize stage runs exactly once.  A PARTIAL resume with the
-    # dict parquet missing fails LOUDLY instead of silently re-tokenizing
-    # the full corpus — the expensive stage the manifest exists to skip;
-    # pass rebuild_dict=True to explicitly pay that cost.
-    try:
-        alias_dict = spark.read.parquet(dict_path)
-    except Exception:
-        if len(pending) != n_buckets and not rebuild_dict:
+    if opts.canonicalize_identities and not fresh:
+        raise ValueError(
+            "canonicalize_identities=True needs every bucket (identity "
+            f"clusters span buckets), but buckets {sorted(done)} are done"
+        )
+    alias_dict = None
+    if not (fresh or rebuild_dict):
+        alias_dict = _read_parquet_if_exists(spark, dict_path)
+        if alias_dict is None:
             raise RuntimeError(
                 f"partial resume (buckets {sorted(done)} done) but the "
                 f"persisted alias dict is missing at {dict_path}; refusing "
                 "to silently re-tokenize the full corpus — restore the dict "
                 "or pass rebuild_dict=True"
-            ) from None
-        dict_src = (
-            notes
-            if len(pending) == n_buckets
-            else tokenize_documents(docs, include_mdlinks=opts.include_mdlinks)
+            )
+
+    docs = documents.withColumn("bucket", _bucket("doc_id", n_buckets))
+    # pending buckets only (the filter pushes to the scan)
+    sub = docs.filter(F.col("bucket").isin(pending))
+    notes = prepare_notes(sub, opts).persist()
+    edges_b = None
+    try:
+        if alias_dict is None:
+            # on a fresh run the pending notes ARE the corpus, so the
+            # tokenize stage runs exactly once
+            dict_src = notes if fresh else prepare_notes(docs, opts)
+            build_alias_dict(dict_src, use_aliases=opts.use_aliases).write.mode(
+                "overwrite"
+            ).parquet(dict_path)
+            alias_dict = spark.read.parquet(dict_path)
+
+        g = link_notes(notes, alias_dict, opts)
+        nodes_b = g.nodes.withColumn("bucket", _bucket("doc_id", n_buckets))
+        edges_b = g.edges.withColumn("bucket", _bucket("subj", n_buckets)).persist()
+
+        # dynamic partition overwrite = Iceberg overwritePartitions
+        # semantics: a retried bucket REPLACES its own partition, so a bucket
+        # that was half-written when the job died is rewritten exactly once
+        # on resume.
+        (
+            nodes_b.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(nodes_path)
         )
-        build_alias_dict(dict_src, use_aliases=opts.use_aliases).write.mode(
-            "overwrite"
-        ).parquet(dict_path)
-        alias_dict = spark.read.parquet(dict_path)
-
-    notes_b = notes.withColumn("bucket", _bucket("doc_id", n_buckets))
-
-    mentions = mentions_from_notes(notes)
-    edges, dangling = resolve_mentions(mentions, alias_dict, use_aliases=opts.use_aliases)
-    if opts.include_tag_triples:
-        edges = edges.unionByName(tag_triples(notes))
-    edges_b = edges.withColumn("bucket", _bucket("subj", n_buckets)).persist()
-
-    # dynamic partition overwrite = Iceberg overwritePartitions semantics:
-    # a retried bucket REPLACES its own partition, so a bucket that was
-    # half-written when the job died is rewritten exactly once on resume.
-    (
-        notes_b.drop("mentions")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(nodes_path)
-    )
-    (
-        edges_b.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(edges_path)
-    )
-
-    # --- phase 3: lineage manifest (per-bucket metrics + checksum)
-    dang_b = dangling.withColumn("bucket", _bucket("subj", n_buckets))
-    m_docs = notes_b.groupBy("bucket").agg(F.count("*").alias("n_docs"))
-    # two-phase salted aggregation (hub-skew-proof metric path)
-    m_edges = (
-        edges_b.groupBy("bucket", F.pmod(F.xxhash64("obj"), F.lit(32)).alias("_s"))
-        .agg(
-            F.count("*").alias("_c"),
-            F.sum(F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)")).alias("_h"),
+        (
+            edges_b.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(edges_path)
         )
-        .groupBy("bucket")
-        .agg(F.sum("_c").alias("n_edges"), F.sum("_h").alias("edges_checksum"))
-    )
-    m_dang = dang_b.groupBy("bucket").agg(F.count("*").alias("n_dangling"))
-    manifest = (
-        m_docs.join(m_edges, "bucket", "left")
-        .join(m_dang, "bucket", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("bucket").cast("int"),
-            F.col("n_docs").cast("long"),
-            F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
-            F.coalesce("n_dangling", F.lit(0)).cast("long").alias("n_dangling"),
-            F.coalesce("edges_checksum", F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("edges_checksum"),
-            F.lit("done").alias("status"),
-            F.lit(time.time()).alias("finished_at"),
-        )
-    )
-    # buckets with zero docs still need a done row
-    present = {r.bucket for r in manifest.select("bucket").collect()}
-    missing = [b for b in pending if b not in present]
-    if missing:
-        from decimal import Decimal
 
-        empty = spark.createDataFrame(
-            [(run_id, b, 0, 0, 0, Decimal(0), "done", time.time()) for b in missing],
-            MANIFEST_SCHEMA,
+        # lineage manifest (per-bucket metrics + checksum)
+        dang_b = g.dangling.withColumn("bucket", _bucket("subj", n_buckets))
+        m_docs = nodes_b.groupBy("bucket").agg(F.count("*").alias("n_docs"))
+        # two-phase salted aggregation (hub-skew-proof metric path)
+        m_edges = (
+            edges_b.groupBy("bucket", F.pmod(F.xxhash64("obj"), F.lit(32)).alias("_s"))
+            .agg(
+                F.count("*").alias("_c"),
+                F.sum(F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)")).alias("_h"),
+            )
+            .groupBy("bucket")
+            .agg(F.sum("_c").alias("n_edges"), F.sum("_h").alias("edges_checksum"))
         )
-        manifest = manifest.unionByName(empty)
-    _append_manifest(manifest, manifest_path)
+        m_dang = dang_b.groupBy("bucket").agg(F.count("*").alias("n_dangling"))
+        manifest = (
+            m_docs.join(m_edges, "bucket", "left")
+            .join(m_dang, "bucket", "left")
+            .select(
+                F.lit(run_id).alias("run_id"),
+                F.col("bucket").cast("int"),
+                F.col("n_docs").cast("long"),
+                F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
+                F.coalesce("n_dangling", F.lit(0)).cast("long").alias("n_dangling"),
+                F.coalesce("edges_checksum", F.lit(0))
+                .cast("decimal(38,0)")
+                .alias("edges_checksum"),
+                F.lit("done").alias("status"),
+                F.lit(time.time()).alias("finished_at"),
+            )
+        )
+        # buckets with zero docs still need a done row
+        present = {r.bucket for r in manifest.select("bucket").collect()}
+        missing = [b for b in pending if b not in present]
+        if missing:
+            from decimal import Decimal
 
-    notes.unpersist()
-    edges_b.unpersist()
+            empty = spark.createDataFrame(
+                [(run_id, b, 0, 0, 0, Decimal(0), "done", time.time()) for b in missing],
+                MANIFEST_SCHEMA,
+            )
+            manifest = manifest.unionByName(empty)
+        _append_manifest(manifest, manifest_path)
+    finally:
+        notes.unpersist()
+        if edges_b is not None:
+            edges_b.unpersist()
     return MaterializeResult(
         nodes_path, edges_path, manifest_path, pending, sorted(done)
     )

@@ -2,12 +2,16 @@
 
 This is the engine's equivalent of the reference's
 ``VaultBuilder → get_digraph`` lifecycle (SURVEY.md §3 E2/E3), expressed as
-one declarative DataFrame plan:
+one declarative DataFrame plan in two stages:
 
-  documents ─ tokenize (1 Arrow stage) ─┬─ nodes
-                                        ├─ alias dict ───┐ planner-chosen
-                                        └─ mentions ─────┴─ join ─ edges
-                                                                   dangling
+  documents ─ prepare_notes ─ notes ─┬─ nodes                 (link_notes)
+   tokenize (1 Arrow stage)          ├─ alias dict ───┐ planner-chosen
+   + analyzer pre-filters            └─ mentions ─────┴─ join ─ edges
+                                                                dangling
+
+This module owns that dataflow: ``build_graph`` and
+``plans.materialize.materialize_graph`` both run its two stages, so every
+``GraphBuildOptions`` field changes both outputs the same way.
 
 Analyzer-style pre-filters (reference examples/analyzer.rs:38-49: drop
 parse errors / empty notes / todo notes before graph build) are options.
@@ -20,7 +24,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.linking import build_alias_dict, resolve_mentions
+from ..checkpointing import cut_lineage
+from ..operators.linking import build_alias_dict, identity_clusters, resolve_mentions
 from ..operators.tokenize import (
     mentions_from_notes,
     tag_triples,
@@ -37,7 +42,6 @@ class GraphBuildOptions:
     drop_parse_errors: bool = False  # analyzer.rs:38-44
     drop_empty: bool = False  # analyzer.rs:45
     drop_todo: bool = False  # analyzer.rs:46-49
-    persist_notes: bool = True  # cache the tokenize stage (3 consumers)
     # north_star canonicalization: rewrite every edge endpoint to its
     # identity-cluster canonical id (linking.identity_clusters — CC over
     # shared-stem ∪ identical-content ∪ alias→name evidence), collapsing
@@ -62,38 +66,34 @@ def reference_parity_options() -> GraphBuildOptions:
     )
 
 
-def build_graph(
-    documents: DataFrame,
-    opts: GraphBuildOptions | None = None,
-    raw_text: bool = False,
-) -> GraphBuild:
-    """documents(doc_id, spans) — or (doc_id, raw_text) with raw_text=True —
-    → GraphBuild.  Lazy: no Spark job runs until an action on the outputs
-    (``canonicalize_identities`` aside — its CC pass cuts lineage eagerly).
-    The dictionary join carries no hint: the planner broadcasts it under
-    ``spark.sql.autoBroadcastJoinThreshold`` and AQE may convert a shuffled
-    join at runtime, so nothing is counted up front to choose a strategy."""
-    opts = opts or GraphBuildOptions()
+def prepare_notes(
+    documents: DataFrame, opts: GraphBuildOptions, raw_text: bool = False
+) -> DataFrame:
+    """Stage 1: documents → notes, analyzer pre-filters applied.
+    Unpersisted: the caller caches it once for its three consumers (nodes,
+    dictionary, mentions) — the reference's OnceCell memoization
+    (src/note/note_once_cell.rs)."""
     notes = (
         tokenize_raw_text(documents, include_mdlinks=opts.include_mdlinks)
         if raw_text
         else tokenize_documents(documents, include_mdlinks=opts.include_mdlinks)
     )
-
     if opts.drop_parse_errors:
         notes = notes.filter(F.col("parse_error").isNull())
     if opts.drop_empty:
         notes = notes.filter(~F.col("is_empty"))
     if opts.drop_todo:
         notes = notes.filter(~F.col("is_todo"))
+    return notes
 
-    # The tokenize stage feeds three consumers (nodes, dict, mentions) —
-    # persist it so the Python stage runs once, mirroring the reference's
-    # OnceCell memoization (src/note/note_once_cell.rs).
-    if opts.persist_notes:
-        notes = notes.persist()
 
-    alias_dict = build_alias_dict(notes, use_aliases=opts.use_aliases)
+def link_notes(
+    notes: DataFrame, alias_dict: DataFrame, opts: GraphBuildOptions
+) -> GraphBuild:
+    """Stage 2: notes + alias dictionary → GraphBuild (mentions resolved,
+    tag triples, optional identity canonicalization).  ``alias_dict`` need
+    not come from ``notes``: a resumed materialization passes the run's
+    corpus-wide dictionary while ``notes`` holds only pending buckets."""
     mentions = mentions_from_notes(notes)
     edges, dangling = resolve_mentions(
         mentions, alias_dict, use_aliases=opts.use_aliases
@@ -104,11 +104,7 @@ def build_graph(
     nodes = notes.drop("mentions")
 
     if opts.canonicalize_identities:
-        from ..operators.linking import identity_clusters
-
         ids = identity_clusters(nodes).select("doc_id", "canonical_id")
-        from ..checkpointing import cut_lineage
-
         ids = cut_lineage(ids)  # CC output reused on both endpoints
         subj_map = ids.select(
             F.col("doc_id").alias("subj"), F.col("canonical_id").alias("_cs")
@@ -141,3 +137,20 @@ def build_graph(
         )
 
     return GraphBuild(nodes=nodes, edges=edges, dangling=dangling, alias_dict=alias_dict)
+
+
+def build_graph(
+    documents: DataFrame,
+    opts: GraphBuildOptions | None = None,
+    raw_text: bool = False,
+) -> GraphBuild:
+    """documents(doc_id, spans) — or (doc_id, raw_text) with raw_text=True —
+    → GraphBuild, the dictionary built from the same (persisted) notes.
+    Lazy: no Spark job runs until an action on the outputs
+    (``canonicalize_identities`` aside — its CC pass cuts lineage eagerly).
+    The dictionary join carries no hint: the planner broadcasts it under
+    ``spark.sql.autoBroadcastJoinThreshold`` and AQE may convert a shuffled
+    join at runtime, so nothing is counted up front to choose a strategy."""
+    opts = opts or GraphBuildOptions()
+    notes = prepare_notes(documents, opts, raw_text).persist()
+    return link_notes(notes, build_alias_dict(notes, use_aliases=opts.use_aliases), opts)

@@ -51,7 +51,7 @@ docs.count()  # warm input listing/footers
 # warm the python worker pool (bench.py does the same)
 spark.range(1000).selectExpr("id").toPandas()
 
-opts = GraphBuildOptions(persist_notes=True)
+opts = GraphBuildOptions()
 phases = {{}}
 for rnd in range(2):  # run 1 pays JIT; keep best per phase
     spark.catalog.clearCache()

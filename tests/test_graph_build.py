@@ -2,6 +2,7 @@
 
 import pytest
 
+from obsidian_parser_spark.plans.materialize import materialize_graph, read_graph
 from obsidian_parser_spark.plans.pipeline import (
     GraphBuildOptions,
     build_graph,
@@ -149,7 +150,28 @@ def test_tag_triples_and_node_columns(spark):
     assert node.note_name == "n"
 
 
-def test_analyzer_prefilters(spark):
+@pytest.fixture(params=["build_graph", "materialize_graph"])
+def graph_of(spark, tmp_path, request):
+    """(documents, opts) → (nodes, edges), through ``build_graph`` or through
+    a fresh ``materialize_graph`` run read back with ``read_graph``: one
+    suite for both products of the graph-build dataflow."""
+    if request.param == "build_graph":
+
+        def run(docs, opts):
+            g = build_graph(docs, opts)
+            return g.nodes, g.edges
+
+    else:
+
+        def run(docs, opts):
+            out = str(tmp_path / "graph")
+            materialize_graph(spark, docs, out, run_id="t", n_buckets=2, opts=opts)
+            return read_graph(spark, out)
+
+    return run
+
+
+def test_analyzer_prefilters(spark, graph_of):
     rows = [
         spans_from_raw("keep", "[[gone]] [[todo_note]] [[empty]]"),
         spans_from_raw("todo_note", "---\ntags: [todo]\n---\nx [[keep]]"),
@@ -163,11 +185,11 @@ def test_analyzer_prefilters(spark):
         drop_empty=True,
         drop_todo=True,
     )
-    g = build_graph(spans_df(spark, rows), opts)
+    nodes, edges = graph_of(spans_df(spark, rows), opts)
     # analyzer.rs:45-49: todo + empty notes removed BEFORE graph build ⇒
     # their nodes vanish and links to them dangle.
-    assert sorted(r.doc_id for r in g.nodes.collect()) == ["gone", "keep"]
-    assert [(r.subj, r.obj) for r in g.edges.collect()] == [("keep", "gone")]
+    assert sorted(r.doc_id for r in nodes.collect()) == ["gone", "keep"]
+    assert [(r.subj, r.obj) for r in edges.collect()] == [("keep", "gone")]
 
 
 def test_identity_clusters_collapse(spark):
@@ -224,7 +246,7 @@ def test_triple_precision_recall_vs_reference(spark, micro_vault):
     assert precision == 1.0 and recall == 1.0
 
 
-def test_canonicalize_identities_collapses_graph(spark):
+def test_canonicalize_identities_collapses_graph(spark, graph_of):
     """GraphBuildOptions(canonicalize_identities=True): duplicate-identity
     notes merge into one node and edges rewrite both endpoints to the
     canonical id; tag objects (not note ids) pass through untouched."""
@@ -234,12 +256,12 @@ def test_canonicalize_identities_collapses_graph(spark):
         spans_from_raw("y", "points back [[x]]"),
     ]
     docs = spans_df(spark, rows)
-    g = build_graph(
+    nodes_df, edges_df = graph_of(
         docs, GraphBuildOptions(canonicalize_identities=True)
     )
-    nodes = {r.doc_id for r in g.nodes.collect()}
+    nodes = {r.doc_id for r in nodes_df.collect()}
     assert nodes == {"a/x", "y"}  # b/x collapsed into canonical a/x
-    triples = {(r.subj, r.pred, r.obj) for r in g.edges.collect()}
+    triples = {(r.subj, r.pred, r.obj) for r in edges_df.collect()}
     # y's [[x]] resolved to the short-name winner, then canonicalized
     assert ("y", "links_to", "a/x") in triples
     assert ("a/x", "links_to", "y") in triples

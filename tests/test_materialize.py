@@ -1,12 +1,35 @@
 """Resumable bucketed materialization: lineage manifest + skip-done resume."""
 
+import os
+import shutil
+from collections import Counter
+
 import pyspark.sql.functions as F
+import pytest
 
 from obsidian_parser_spark.plans.materialize import (
     materialize_graph,
     read_graph,
 )
+from obsidian_parser_spark.plans.pipeline import GraphBuildOptions, build_graph
 from obsidian_parser_spark.sources.corpus import ensure_vault_corpus
+
+
+def _keep_done_below(spark, manifest_path, bucket):
+    """Rewrite the manifest with only buckets < ``bucket`` marked done — a
+    run killed after committing those buckets."""
+    manifest = spark.read.parquet(manifest_path)
+    kept_rows = manifest.filter(F.col("bucket") < bucket).collect()
+    shutil.rmtree(manifest_path)
+    spark.createDataFrame(kept_rows, manifest.schema).write.parquet(manifest_path)
+
+
+def _triples(edges):
+    return Counter(map(tuple, edges.select("subj", "pred", "obj").collect()))
+
+
+def _cached_rdd_ids(spark):
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def test_materialize_and_resume(spark, tmp_path):
@@ -28,6 +51,8 @@ def test_materialize_and_resume(spark, tmp_path):
     assert all(r.status == "done" for r in mrows)
     assert sum(r.n_docs for r in mrows) == n_docs
     assert sum(r.n_edges for r in mrows) == edges.count()
+    # the committed edges are build_graph's edges, as a multiset
+    assert _triples(edges) == _triples(build_graph(docs).edges)
 
     # resume with same run_id: everything already done → no-op
     r2 = materialize_graph(spark, docs, out, run_id="r1", n_buckets=4)
@@ -133,3 +158,61 @@ def test_manifest_append_is_atomic_and_accumulates(spark, tmp_path):
     assert m.count() == 4  # 2 buckets × 2 runs
     leftovers = [d for d in os.listdir(out) if "_tmp_" in d]
     assert leftovers == []
+
+
+def test_partial_resume_torn_dict_fails_loudly(spark, tmp_path):
+    """A torn alias dict on a partial resume propagates its read error; it
+    is not misreported as a missing dict (nor silently rebuilt)."""
+    path = ensure_vault_corpus("sf0.0002", base=str(tmp_path / "corpus"))
+    docs = spark.read.parquet(path)
+    out = str(tmp_path / "graph")
+
+    r1 = materialize_graph(spark, docs, out, run_id="rT", n_buckets=4)
+    _keep_done_below(spark, r1.manifest_path, 2)
+    dict_dir = os.path.join(out, "alias_dict_rT")
+    shutil.rmtree(dict_dir)
+    os.makedirs(dict_dir)
+    with open(os.path.join(dict_dir, "part-00000-torn.parquet"), "wb") as f:
+        f.write(b"PAR1\x00\x00this is not a real footer")
+
+    with pytest.raises(Exception) as exc:
+        materialize_graph(spark, docs, out, run_id="rT", n_buckets=4)
+    assert "alias dict is missing" not in str(exc.value)
+
+
+def test_partial_resume_refuses_canonicalize(spark, tmp_path):
+    """Identity clusters span buckets: a partial resume with
+    canonicalize_identities=True raises before any work."""
+    path = ensure_vault_corpus("sf0.0002", base=str(tmp_path / "corpus"))
+    docs = spark.read.parquet(path)
+    out = str(tmp_path / "graph")
+
+    r1 = materialize_graph(spark, docs, out, run_id="rC", n_buckets=4)
+    _keep_done_below(spark, r1.manifest_path, 2)
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(ValueError, match="canonicalize_identities"):
+        materialize_graph(
+            spark,
+            docs,
+            out,
+            run_id="rC",
+            n_buckets=4,
+            opts=GraphBuildOptions(canonicalize_identities=True),
+        )
+    assert _cached_rdd_ids(spark) - before == set()
+
+
+def test_failed_write_releases_cached_frames(spark, tmp_path):
+    """A run that dies in the edges write (after the nodes write has
+    filled the notes cache) leaves no cached frame behind."""
+    path = ensure_vault_corpus("sf0.0002", base=str(tmp_path / "corpus"))
+    docs = spark.read.parquet(path)
+    out = tmp_path / "graph"
+    out.mkdir()
+    (out / "edges").write_text("not a directory")
+
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(Exception):
+        materialize_graph(spark, docs, str(out), run_id="rF", n_buckets=2)
+    assert os.path.isdir(out / "nodes")  # the nodes write did run
+    assert _cached_rdd_ids(spark) - before == set()
